@@ -20,6 +20,12 @@ shuffle keys are the high-cardinality ones; Python appears only in Arrow-batched
 pandas UDFs, never row-at-a-time.
 """
 
+from bigdatabowl_spark import zipcache
 from bigdatabowl_spark.session import get_spark  # noqa: F401
+
+# every Python worker imports this package when it unpickles one of our
+# UDFs; from then on each importer re-reads its archive once more, and
+# after that only when the archive changes
+zipcache.install()
 
 __version__ = "0.1.0"

@@ -766,43 +766,45 @@ def _with_frame_meta(
     norm: DataFrame,
     min_t_frame: int = 14,
     max_t_frame: int = 47,
-    n_tasks: int | None = None,
 ) -> DataFrame:
     """Eligibility + frame window (play_eppa_gpu.py:46-47; loop :651).
 
     snap/throw frames located per play; EPPA frames are
     [snap+min_t, min(throw, snap+max_t)]; plays without pass_forward or with
     a fumble are excluded (runtime guards, play_eppa_cpu.py:94-98).
+
+    The result is range-partitioned by (gameId, playId) into one task per
+    core, the plan's only exchange: the per-play window and the caller's
+    ``groupBy("gameId", "playId").applyInPandas`` both accept it, so the
+    window, the filter and the kernel run in one stage. A user-set width is
+    exempt from AQE's byte-based coalescing, which would funnel this
+    compute-bound kernel (~KBs of input per frame) into one task. Range
+    bounds balance sampled rows, and a batch of k plays gets at most k + 1
+    partitions.
+    Measured on 8 equal plays at 4 cores: the former 12-way hash
+    repartition ran 3 waves with a 2-play straggler; the range split runs
+    one wave of 2 plays per task. The price is a sampling job over
+    ``norm``, which re-runs ``norm``'s last stage unless it is cached.
     """
+    sc = norm.sparkSession.sparkContext
+    part = norm.repartitionByRange(sc.defaultParallelism, "gameId", "playId")
     w = Window.partitionBy("gameId", "playId")
     snap = F.min(F.when(F.col("event") == "ball_snap", F.col("frameId"))).over(w)
     throw = F.min(F.when(F.col("event") == "pass_forward", F.col("frameId"))).over(w)
     fumble = F.max(F.when(F.col("event") == "fumble", F.lit(1)).otherwise(F.lit(0))).over(w)
-    df = (
-        norm.withColumn("snap_frame", snap)
-        .withColumn("throw_frame", throw)
-        .withColumn("has_fumble", fumble)
+    # one projection: each withColumn re-analyzes the whole plan
+    return part.select(
+        "*",
+        snap.alias("snap_frame"),
+        throw.alias("throw_frame"),
+        fumble.alias("has_fumble"),
+        (F.col("frameId") - snap).cast("int").alias("frames_after_snap"),
+    ).filter(
+        F.col("throw_frame").isNotNull()
+        & (F.col("has_fumble") == 0)
+        & (F.col("frameId") >= F.col("snap_frame") + min_t_frame)
+        & (F.col("frameId") <= F.least(F.col("throw_frame"), F.col("snap_frame") + max_t_frame))
     )
-    eligible = (
-        df.filter(F.col("throw_frame").isNotNull() & (F.col("has_fumble") == 0))
-        .filter(
-            (F.col("frameId") >= F.col("snap_frame") + min_t_frame)
-            & (F.col("frameId") <= F.least(F.col("throw_frame"), F.col("snap_frame") + max_t_frame))
-        )
-        .withColumn("frames_after_snap", (F.col("frameId") - F.col("snap_frame")).cast("int"))
-    )
-    # Explicit play-key repartition before applyInPandas: the kernel is
-    # COMPUTE-bound (~0.6 s/frame on ~KBs of input), so AQE's byte-based
-    # post-shuffle coalescing would funnel every play into ONE task
-    # (measured: 1 partition, zero parallelism). A user-specified partition
-    # count is exempt from AQE coalescing and satisfies applyInPandas's
-    # ClusteredDistribution, so no second exchange is planned. 3× tasks per
-    # core load-balances the skewed frames-per-play distribution; callers
-    # processing bounded micro-batches (stream foreachBatch) pass a small
-    # n_tasks so a 2-play batch doesn't schedule 96 mostly-empty tasks.
-    sc = norm.sparkSession.sparkContext
-    width = n_tasks if n_tasks is not None else sc.defaultParallelism * 3
-    return eligible.repartition(width, "gameId", "playId")
 
 
 def _make_kernel(
@@ -934,11 +936,10 @@ def eppa_pass_summary(
     params: EppaParams | None = None,
     priors: EppaPriors | None = None,
     value_ensemble=None,
-    n_tasks: int | None = None,
 ) -> DataFrame:
     """passes_df: per-frame argmax summary — the best hypothetical pass
     (unravel_index(argmax), play_eppa_cpu.py:564-614,621-637)."""
-    eligible = _with_frame_meta(norm, n_tasks=n_tasks)
+    eligible = _with_frame_meta(norm)
     return eligible.groupBy("gameId", "playId").applyInPandas(
         _make_kernel(PASS_SCHEMA, _emit_pass, params, priors, value_ensemble),
         PASS_SCHEMA,

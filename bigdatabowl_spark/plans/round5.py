@@ -523,10 +523,7 @@ def stream_eppa_kernel(spark: SparkSession, sf_dir: str):
     def score_batch(batch_df, batch_id: int) -> None:
         # deterministic per-batch path + overwrite = idempotent replay:
         # a crash-retried batch replaces its own output, never duplicates.
-        # n_tasks=8: maxFilesPerTrigger=1 bounds a micro-batch to one
-        # play's frames — the batch path's cores×3 width would schedule
-        # ~90 empty tasks per batch for nothing
-        eppa_pass_summary(batch_df, n_tasks=8).write.mode("overwrite").parquet(
+        eppa_pass_summary(batch_df).write.mode("overwrite").parquet(
             f"{out_dir}/batch={batch_id}"
         )
 

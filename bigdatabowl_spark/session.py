@@ -30,10 +30,31 @@ _BUILD_CONF = {
 }
 
 
+def host_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEM``, else 24g capped at half of the host's MemTotal."""
+    if mem := os.environ.get("SPARK_DRIVER_MEM"):
+        return mem
+    cap_mb = 24 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    cap_mb = min(cap_mb, int(line.split()[1]) // 2048)
+                    break
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def runtime_conf(cpus: int | None = None) -> dict[str, str]:
     """Conf that is runtime-settable — applied defensively to externally
     provided sessions (the correctness driver builds its own SparkSession)."""
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or host_cpus()
     return {
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.adaptive.enabled": "true",
@@ -92,11 +113,11 @@ def configure(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(app_name: str = "bigdatabowl-spark", master: str | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     builder = SparkSession.builder.appName(app_name)
     builder = builder.master(master or f"local[{cpus}]")
     for k, v in _BUILD_CONF.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.sql.shuffle.partitions", str(2 * cpus))
-    builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+    builder = builder.config("spark.driver.memory", driver_memory())
     return configure(builder.getOrCreate())

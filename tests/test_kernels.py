@@ -240,6 +240,127 @@ def test_combined_kernel_slices_match_individual(spark, norm_fixture):
             assert (gv.values == wv.values).all(), (name, c)
 
 
+def test_eppa_plan_has_one_range_exchange(spark, norm_fixture):
+    """The per-play window and the grouped kernel share one exchange: the
+    range partitioning by (gameId, playId) satisfies both."""
+    import re
+
+    df = eppa_field_surface(norm_fixture)
+    df.count()  # run it, so AQE's plan is final
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert re.findall(r"Exchange (\w+)", plan) == ["rangepartitioning"], plan
+
+
+def test_eppa_range_split_puts_two_equal_plays_per_task(spark):
+    """2 x defaultParallelism equal plays (8 at width 4) land 2 per
+    partition: one wave, no straggler, no empty task."""
+    from pyspark.sql import functions as F
+
+    from bigdatabowl_spark.kernels.eppa import _with_frame_meta
+
+    width = spark.sparkContext.defaultParallelism
+    rows = [
+        (1, play, fid, "ball_snap" if fid == 1 else ("pass_forward" if fid == 16 else None),
+         nid, tp, 40.0 + nid, 26.0, 0.0, 0.0)
+        for play in range(1, 2 * width + 1)
+        for fid in range(1, 21)
+        for nid, tp in ((0, "FTBL"), (11, "OFF"), (21, "DEF"))
+    ]
+    norm = spark.createDataFrame(
+        rows,
+        "gameId long, playId long, frameId int, event string, nflId long, "
+        "team_pos string, x double, y double, v_x double, v_y double",
+    )
+    per_part = (
+        _with_frame_meta(norm)
+        .groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.countDistinct("playId").alias("plays"))
+        .collect()
+    )
+    assert sorted(r.plays for r in per_part) == [2] * width
+
+
+def test_eppa_surface_bit_identical_to_direct_kernel(spark, norm_fixture):
+    """Every eligible fixture frame's eppa1/eppa1m surface equals a direct
+    frame_surfaces call bit for bit: the partitioning moves no float."""
+    out = eppa_field_surface(norm_fixture).toPandas()
+    fixture = norm_fixture.toPandas()
+    assert sorted(out.frameId.unique()) == [16, 17, 18, 19, 20]
+    for fid, got in out.groupby("frameId"):
+        frame = fixture[(fixture.playId == 100) & (fixture.frameId == fid)]
+        qb = frame[frame.position == "QB"]
+        s = frame_surfaces(
+            frame[(frame.nflId != 0) & (frame.position != "QB")],
+            qb[["x", "y"]].iloc[0].to_numpy(dtype=np.float64),
+            int(fid) - 2,  # snap is frame 2
+            EppaParams(),
+            EppaPriors.default(),
+        )
+        got = got.sort_values(["ball_end_y", "ball_end_x"])  # field_grid order
+        np.testing.assert_array_equal(got["eppa1"].to_numpy(), s["eppa_ft"].sum(axis=1))
+        np.testing.assert_array_equal(got["eppa1m"].to_numpy(), s["eppa_ft"].max(axis=1))
+
+
+# ------------------------------------------------ worker zip-import cache
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+
+
+def test_zipcache_skips_reread_of_unchanged_archive(tmp_path, monkeypatch):
+    import zipimport
+
+    from bigdatabowl_spark import zipcache
+
+    zipcache.install()
+    archive = str(tmp_path / "lib.zip")
+    _write_zip(archive, {"zc_mod_a": "X = 1\n"})
+    imp = zipimport.zipimporter(archive)
+    imp.invalidate_caches()  # first call may re-read: no stat recorded yet
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda p: reads.append(p) or real(p)
+    )
+    for _ in range(3):
+        imp.invalidate_caches()
+    assert reads == []
+    assert imp.find_spec("zc_mod_a") is not None
+
+
+def test_zipcache_rereads_archive_rewritten_in_place(tmp_path, monkeypatch):
+    import importlib
+    import os
+    import sys
+    import zipimport
+
+    from bigdatabowl_spark import zipcache
+
+    zipcache.install()
+    archive = str(tmp_path / "lib.zip")
+    _write_zip(archive, {"zc_old": "X = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    assert importlib.import_module("zc_old").X == 1
+    importlib.invalidate_caches()  # records the archive's stat
+    _write_zip(archive, {"zc_old": "X = 1\n", "zc_new": "Y = 2\n"})
+    st = os.stat(archive)
+    os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    importlib.invalidate_caches()
+    try:
+        assert importlib.import_module("zc_new").Y == 2
+        assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
+    finally:
+        for name in ("zc_old", "zc_new"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
 # ------------------------------------------------- full-width value models
 
 

@@ -226,29 +226,38 @@ def test_graph_layout_decision_is_degree_aware(spark):
     # degenerate inputs don't divide by zero
     assert graph_layout_decision(0, 0, 64) == "by_src"
 
-    # end-to-end: the staged layouts match the decision
-    n_nodes = 10_000
-    uniform = spark.range(100_000).select(
-        (F.col("id") % n_nodes).cast("long").alias("src"),
-        F.pmod(F.hash("id"), F.lit(n_nodes)).cast("long").alias("dst"),
-    )
-    hubby = spark.range(100_000).select(
-        F.when(F.col("id") % 2 == 0, F.lit(0))
-        .otherwise(F.col("id") % n_nodes)
-        .cast("long")
-        .alias("src"),
-        F.pmod(F.hash("id"), F.lit(n_nodes)).cast("long").alias("dst"),
-    )
-    for edges, expected in ((uniform, "by_src"), (hubby, "round_robin")):
-        degs = edges.groupBy("src").agg(
-            F.count("*").alias("deg")
-        ).withColumnRenamed("src", "node")
-        graph, layout, degs_ckpt = checkpoint_graph(spark, edges, degs)
-        assert layout == expected
-        assert graph.count() == 100_000
-        # the returned degree table is the build's one materialization
-        # (callers reuse it for rank init instead of replaying the
-        # edge-scan groupBy) and it matches the lazy original
-        plan = degs_ckpt._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in plan, plan
-        assert degs_ckpt.count() == degs.count()
+    # end-to-end: the staged layouts match the decision. checkpoint_graph
+    # reads n_part from spark.sql.shuffle.partitions (2 x CPUs by default),
+    # and the hub's 50,000 of 100,000 edges dominate only when n_part > 8
+    # (4 x 100,000 / n_part < 50,000), so pin the width: at 4 CPUs the
+    # default 8 put the hub exactly at the 4x boundary, which keeps by_src
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try:
+        n_nodes = 10_000
+        uniform = spark.range(100_000).select(
+            (F.col("id") % n_nodes).cast("long").alias("src"),
+            F.pmod(F.hash("id"), F.lit(n_nodes)).cast("long").alias("dst"),
+        )
+        hubby = spark.range(100_000).select(
+            F.when(F.col("id") % 2 == 0, F.lit(0))
+            .otherwise(F.col("id") % n_nodes)
+            .cast("long")
+            .alias("src"),
+            F.pmod(F.hash("id"), F.lit(n_nodes)).cast("long").alias("dst"),
+        )
+        for edges, expected in ((uniform, "by_src"), (hubby, "round_robin")):
+            degs = edges.groupBy("src").agg(
+                F.count("*").alias("deg")
+            ).withColumnRenamed("src", "node")
+            graph, layout, degs_ckpt = checkpoint_graph(spark, edges, degs)
+            assert layout == expected
+            assert graph.count() == 100_000
+            # the returned degree table is the build's one materialization
+            # (callers reuse it for rank init instead of replaying the
+            # edge-scan groupBy) and it matches the lazy original
+            plan = degs_ckpt._jdf.queryExecution().executedPlan().toString()
+            assert "ExistingRDD" in plan, plan
+            assert degs_ckpt.count() == degs.count()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
