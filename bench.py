@@ -17,13 +17,14 @@ instantiates pages lazily, so a single shot can absorb multi-second
 first-touch stalls that say nothing about the plan. CPU seconds are the
 load-robust companion (VERDICT r6 item 3): external host contention
 inflates wall-clock but not CPU charged to our process tree, so a >1.5×
-wall delta with flat CPU is environment, not regression. Load average is
-snapshotted at every stage boundary for the same reason.
+wall delta with flat CPU is environment, not regression. Hypervisor steal
+is stamped per stage and per row for the same reason (see _StealMeter).
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import json
 import os
 import re
@@ -32,7 +33,8 @@ import time
 
 N_EPPA_FRAMES = 34  # full eligible window (snap+14..snap+47) — the unit the
 #                     reference's 1.13-1.31 frames/s was measured on
-N_EPPA_PLAYS = 32  # one play per core → full single-node task parallelism
+N_EPPA_PLAYS = 32  # fixed work, independent of core count, so the leg
+#                   stays comparable across rounds and hosts
 
 BENCH_QUERIES = [
     "a1_pricing_summary",
@@ -659,39 +661,16 @@ def bench_text_scale(spark, n_docs: int = 1_000_000, toks_per_doc: int = 20):
     )
 
 
-def _ambient_cpu_frac(interval: float = 0.5) -> float:
-    """Fraction of the box's CPU busy with OTHER people's work, measured
-    from two /proc/stat snapshots while THIS process is idle (call it
-    before any Spark session exists / after every prior JVM is dead).
-    load_avg can't distinguish neighbors from our own just-finished
-    32-thread sweep (1-min decay), so the contended flag keys off this
-    instantaneous probe instead (VERDICT r10 item 2: the driver artifact's
-    12.8-17 load was only discoverable by reading load_avg manually)."""
-
-    def snap():
-        with open("/proc/stat") as f:
-            parts = f.readline().split()[1:]
-        vals = [int(x) for x in parts]
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)  # idle + iowait
-        return sum(vals), idle
-
-    t0, i0 = snap()
-    time.sleep(interval)
-    t1, i1 = snap()
-    dt_total = max(t1 - t0, 1)
-    return round(1.0 - (i1 - i0) / dt_total, 3)
-
-
 class _StealMeter:
     """Per-stage-window hypervisor steal fraction (/proc/stat `steal`
     ticks over total ticks since the previous window() call).
 
-    load_avg and _ambient_cpu_frac both read THIS GUEST's scheduler —
-    neither can see HOST-level oversubscription, where the hypervisor
-    deschedules our vCPUs mid-run. That failure mode inflates wall AND
-    our own charged CPU seconds (straggler amplification + GC churn) on
-    a box whose every guest-side probe reads idle: r12's first
-    code-freeze capture started at load 0.22 / ambient 0.001 yet carried
+    Guest-side probes (load average, idle /proc/stat ticks) read THIS
+    GUEST's scheduler and cannot see HOST-level oversubscription, where
+    the hypervisor deschedules our vCPUs mid-run. That failure mode
+    inflates wall AND our own charged CPU seconds (straggler
+    amplification + GC churn) on a box whose every guest-side probe reads
+    idle: r12's first code-freeze capture started at load 0.22 yet carried
     12.4% measured steal under load, inflating untouched queries 1.3-4.6×
     (text_1m_bigram_counts 3.5 → 16.3 s with its code byte-identical —
     OPTIMIZATION_r12.md "Re-measure"). The meter stamps each artifact
@@ -733,48 +712,6 @@ def _suspect_rows(
     return sorted(
         n for n in timings if steal_q.get(n, 0.0) > _SUSPECT_STEAL
     )
-
-
-# a leg/run counts as contended when neighbors hold >12.5% of the box
-# (>4 of 32 cores) at its start — enough to visibly skew 32-thread legs
-_CONTENDED_FRAC = 0.125
-
-# The committed idle artifact is additionally gated on the 1-min load
-# average (VERDICT r11 "what's wrong" #1: the r11 idle run started at
-# load 2.32 — the instantaneous ambient probe read ~0 at its sample
-# instants, so a loadavg-visible background slipped past the contended
-# flag and inflated every sub-second row ~20%). The ambient probe stays
-# the contended signal DURING a run (loadavg is laggy and can't tell
-# neighbors from our own just-finished sweep); the loadavg gate guards
-# the *start* of a run that claims to be idle — the operator controls
-# that moment and can simply wait for the box to drain.
-_IDLE_GATE_LOAD = 0.5
-
-
-def _idle_gate(suffix: str) -> dict | None:
-    """For an `idle`-suffixed artifact: refuse to run while the 1-min
-    load average says the box isn't actually idle (override with
-    SPARK_GRAFT_IDLE_GATE_OVERRIDE=1, which records the violation in the
-    artifact instead of aborting). Returns the gate record to embed, or
-    None when the suffix doesn't claim idleness."""
-    if "idle" not in suffix:
-        return None
-    load1 = round(os.getloadavg()[0], 2)
-    gate = {"load_avg_1m": load1, "threshold": _IDLE_GATE_LOAD,
-            "passed": load1 < _IDLE_GATE_LOAD}
-    if not gate["passed"] and os.environ.get(
-        "SPARK_GRAFT_IDLE_GATE_OVERRIDE"
-    ) != "1":
-        print(
-            f"[bench] idle gate: load_avg(1m)={load1} >= {_IDLE_GATE_LOAD} — "
-            "an artifact claiming 'idle' must start on a drained box. Wait "
-            "for load to fall, or set SPARK_GRAFT_IDLE_GATE_OVERRIDE=1 to "
-            "record the violation instead.",
-            file=sys.stderr,
-            flush=True,
-        )
-        sys.exit(3)
-    return gate
 
 
 def _invalidate_kernel_staging() -> int:
@@ -870,9 +807,6 @@ def run_scale_legs(sf_dir: str, leg: str) -> dict:
     from bigdatabowl_spark.session import get_spark
     import bigdatabowl_spark.plans  # noqa: F401
 
-    # ambient probe BEFORE the session exists: the only CPU users right
-    # now are neighbors (main JVM and prior legs are dead)
-    ambient = _ambient_cpu_frac()
     steal = _StealMeter()
     spark = get_spark(f"bdb-bench-scale-{leg}")
     spark.sparkContext.setLogLevel("ERROR")
@@ -881,11 +815,7 @@ def run_scale_legs(sf_dir: str, leg: str) -> dict:
     # fresh-JVM graph-build leg read 6.7 s idle vs 2.8 s r9-warm — a
     # standing fake regression).
     _warmup_session(spark)
-    out: dict = {
-        "load_start": round(os.getloadavg()[0], 2),
-        "ambient_cpu_frac": ambient,
-        "contended": ambient > _CONTENDED_FRAC,
-    }
+    out: dict = {}
 
     if leg == "eppa":
         eppa_sec, eppa_fps, eppa_cpu = bench_eppa_kernel(spark)
@@ -960,7 +890,6 @@ def run_scale_legs(sf_dir: str, leg: str) -> dict:
     else:
         raise ValueError(f"unknown scale leg: {leg!r}")
     out["steal_frac"] = steal.window()
-    out["load_end"] = round(os.getloadavg()[0], 2)
     spark.stop()
     return out
 
@@ -994,26 +923,30 @@ def _spawn_scale_legs(sf_dir: str) -> dict:
         # the child's own prints all go to stderr, but stay defensive)
         lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
         payload = json.loads(lines[-1])
-        merged[f"load_{leg}"] = (
-            payload.pop("load_start"),
-            payload.pop("load_end"),
-        )
-        merged[f"ambient_{leg}"] = payload.pop("ambient_cpu_frac")
-        merged[f"contended_{leg}"] = payload.pop("contended")
         merged[f"steal_{leg}"] = payload.pop("steal_frac")
         merged.update(payload)
     return merged
+
+
+def current_round(root: str) -> int:
+    """The round an artifact written now belongs to: one past the highest
+    BENCH_r{N}.json recorded under `root`, or SPARK_GRAFT_ROUND when set.
+    bench.py and the probes in scripts/ stamp their artifacts with it."""
+    rnd = os.environ.get("SPARK_GRAFT_ROUND")
+    if rnd is not None:
+        return int(rnd)
+    recorded = [
+        int(m.group(1))
+        for p in glob.glob(os.path.join(root, "BENCH_r*.json"))
+        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
+    ]
+    return max(recorded, default=0) + 1
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    suffix_env = os.environ.get("SPARK_GRAFT_BENCH_SUFFIX", "")
-    idle_gate = _idle_gate(suffix_env)  # may sys.exit(3) — see helper
-    loads = {"start": round(os.getloadavg()[0], 2)}
-    # neighbor-CPU probe before anything of ours runs (see _ambient_cpu_frac)
-    ambient_start = _ambient_cpu_frac()
     steal_m = _StealMeter()
     steals: dict[str, float] = {}
 
@@ -1039,7 +972,6 @@ def main() -> None:
     # round-over-round fps change here is a kernel regression, not staging
     # contention; the in-suite measurement at the end keeps continuity.
     eppa_iso_sec, eppa_iso_fps, eppa_iso_cpu = bench_eppa_kernel(spark)
-    loads["after_warmup"] = round(os.getloadavg()[0], 2)
     steals["warmup"] = steal_m.window()
 
     # Full-catalog sweep: headline queries first (stable ordering for
@@ -1122,7 +1054,6 @@ def main() -> None:
         flush=True,
     )
     _gc_sweep(spark)  # catalog checkpoints + JVM state (see _gc_sweep)
-    loads["after_catalog"] = round(os.getloadavg()[0], 2)
     steals["catalog"] = steal_m.window()
     (
         salted_sec, unsalted_sec, aqe_sec, aqe_off_sec,
@@ -1138,7 +1069,6 @@ def main() -> None:
     cpu_secs["skew_join_unsalted_hotkey"] = unsalted_cpu
     cpu_secs["skew_join_aqe_split"] = aqe_cpu
     cpu_secs["skew_join_aqe_off_64map"] = aqe_off_cpu
-    loads["after_skew"] = round(os.getloadavg()[0], 2)
     steals["skew"] = steal_m.window()
     for k in (
         "skew_join_salted",
@@ -1163,12 +1093,7 @@ def main() -> None:
     # vs 2.4 solo).
     _shutdown_jvm(spark)
     scale = _spawn_scale_legs(sf_dir)
-    ambient = {"start": ambient_start}
-    contended = ambient_start > _CONTENDED_FRAC
     for leg in ("eppa", "pagerank", "text", "m6"):
-        loads[f"scale_{leg}"] = scale.pop(f"load_{leg}")
-        ambient[leg] = scale.pop(f"ambient_{leg}")
-        contended = contended or scale.pop(f"contended_{leg}")
         steals[f"scale_{leg}"] = scale.pop(f"steal_{leg}")
     for key, leg in (
         ("eppa_kernel_play", "eppa"),
@@ -1188,7 +1113,6 @@ def main() -> None:
     eppa_fps = scale["eppa_frames_per_sec"]
     pr_step_sec = scale["pagerank_10m_sec_per_superstep"]
     enc_tps = scale["text_1m_encode_tokens_per_sec"]
-    loads["end"] = round(os.getloadavg()[0], 2)
     total = round(sum(timings.values()), 3)
     suspect_rows = _suspect_rows(timings, steal_q)
 
@@ -1223,22 +1147,11 @@ def main() -> None:
         "queries": dict(
             sorted(timings.items(), key=lambda kv: -kv[1])[:12]
         ),
-        # host contention context: this VM's numbers swing with invisible
-        # neighbor load — read wobbles against these snapshots and against
-        # bench_full_r{N}.json's per-query CPU seconds, not as regressions.
-        # `contended` is MEASURED (instantaneous /proc/stat neighbor-CPU
-        # probes taken while nothing of ours runs: at process start and at
-        # each scale-leg start), not inferred from the laggy load_avg —
-        # true means some probe saw neighbors holding >12.5% of the box
-        # and the artifact's numbers carry ambient inflation (VERDICT r10
-        # item 2 / next-round item 3b)
-        "contended": contended,
-        "ambient_cpu_frac": ambient,
-        "load_avg": loads,
-        # hypervisor steal per stage window (see _StealMeter): the
-        # HOST-side contention channel the two guest-side probes above
-        # are blind to — >2-3% in a stage means that stage's rows carry
-        # host inflation no matter what load_avg/ambient say
+        # host contention context: this VM's numbers swing with neighbor
+        # load — read wobbles against the hypervisor steal per stage window
+        # (see _StealMeter; >2-3% means that stage's rows carry host
+        # inflation) and bench_full_r{N}.json's per-query CPU seconds, not
+        # as regressions
         "steal_frac": steals,
         # rows whose OWN measurement window exceeded _SUSPECT_STEAL —
         # the machine-readable contamination flag (VERDICT r12 item 2):
@@ -1249,8 +1162,6 @@ def main() -> None:
         "suspect": suspect_rows[:12],
         "n_suspect": len(suspect_rows),
     }
-    if idle_gate is not None:
-        headline["idle_gate"] = idle_gate
     full = dict(
         headline,
         queries=timings,
@@ -1277,31 +1188,18 @@ def main() -> None:
     )
     # Round-stamped artifact (VERDICT r7 item 6): the driver's per-round
     # bench and the builder's committed run used to fight over one
-    # bench_full.json path, leaving the worktree dirty every round. The
-    # round is inferred from the highest BENCH_r{N}.json the driver has
-    # recorded (this run belongs to round N+1); SPARK_GRAFT_ROUND overrides.
-    # The stamp separates ROUNDS, not WRITERS (VERDICT r8 item 3: the
-    # driver's r8 run overwrote the committed idle-box r8 artifact), so the
-    # stem also carries SPARK_GRAFT_BENCH_SUFFIX: the builder commits its
-    # idle run as bench_full_r{N}_idle.json while the driver's suffix-less
-    # bench_full_r{N}.json is .gitignored — both artifacts survive, the
-    # worktree stays clean.
+    # bench_full.json path, leaving the worktree dirty every round (see
+    # current_round). The stamp separates ROUNDS, not WRITERS (VERDICT r8
+    # item 3: the driver's r8 run overwrote the committed idle-box r8
+    # artifact), so the stem also carries SPARK_GRAFT_BENCH_SUFFIX: the
+    # builder commits its idle run as bench_full_r{N}_idle.json while the
+    # driver's suffix-less bench_full_r{N}.json is .gitignored — both
+    # artifacts survive, the worktree stays clean.
     here = os.path.dirname(os.path.abspath(__file__))
-    rnd = os.environ.get("SPARK_GRAFT_ROUND")
-    if rnd is None:
-        import glob as _glob
-        import re as _re
-
-        recorded = [
-            int(m.group(1))
-            for p in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-            if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
-        rnd = str(max(recorded, default=0) + 1)
     suffix = os.environ.get("SPARK_GRAFT_BENCH_SUFFIX", "")
     if suffix and not suffix.startswith("_"):
         suffix = "_" + suffix
-    stem = f"bench_full_r{int(rnd):02d}{suffix}.json"
+    stem = f"bench_full_r{current_round(here):02d}{suffix}.json"
     with open(os.path.join(here, stem), "w") as f:
         json.dump(full, f, indent=1)
     # leading newline + flush: even if anything wrote a partial \r-terminated

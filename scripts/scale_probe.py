@@ -12,9 +12,9 @@ is paired with process-tree CPU seconds (bench.py's sampler) so host
 contention is attributable; each leg is min-of-2.
 
 Families and their 10x axes:
-- eppa_kernel   : 32 plays x 4 frames -> 32 x 40 (same task count, 10x
-                  frames/task — isolates per-frame kernel linearity from
-                  task-parallelism effects on this 32-core box)
+- eppa_kernel   : 32 plays x 4 frames -> 32 x 40 (same plays, 10x
+                  frames/play — isolates per-frame kernel linearity from
+                  task-parallelism effects at any core count)
 - pagerank      : 1M -> 10M edges (sec per superstep; graph build apart)
 - text_encode   : 1M -> 10M docs through bench_text_scale (vocab agg +
                   broadcast-join encode, corpus staged outside the timing)
@@ -642,14 +642,12 @@ def run_family(fam: str, d1: str, d10: str, d100: str) -> dict:
     families in ONE JVM measure each other's accumulated state (broadcast
     / shuffle-cleanup backlog, old-gen pressure — the same signature that
     inflated the in-suite bench legs 2-4× before per-leg JVMs), so each
-    family gets its own subprocess, an untimed warmup (first-job
-    JIT/codegen otherwise lands in the family's first timed window), and
-    a pre-session ambient-CPU probe for the contended flag."""
-    from bench import _ambient_cpu_frac, _warmup_session, _CONTENDED_FRAC
+    family gets its own subprocess and an untimed warmup (first-job
+    JIT/codegen otherwise lands in the family's first timed window)."""
+    from bench import _warmup_session
     from bigdatabowl_spark.session import get_spark
     import bigdatabowl_spark.plans  # noqa: F401 — populates CATALOG
 
-    ambient = _ambient_cpu_frac()
     spark = get_spark(f"bdb-scale-probe-{fam}")
     spark.sparkContext.setLogLevel("ERROR")
     _warmup_session(spark)
@@ -666,14 +664,12 @@ def run_family(fam: str, d1: str, d10: str, d100: str) -> dict:
         "stream_stateful": lambda: probe_stream(spark),
     }
     r = fns[fam]()
-    r["ambient_cpu_frac"] = ambient
-    r["contended"] = ambient > _CONTENDED_FRAC
     spark.stop()
     return r
 
 
 def main() -> None:
-    from bench import _shutdown_jvm
+    from bench import _shutdown_jvm, current_round
     from bigdatabowl_spark.session import get_spark
     import bigdatabowl_spark.plans  # noqa: F401 — populates CATALOG
 
@@ -682,8 +678,6 @@ def main() -> None:
         fam, d1, d10, d100 = sys.argv[i + 1 : i + 5]
         print(json.dumps(run_family(fam, d1, d10, d100)), flush=True)
         return
-
-    loads = {"start": round(os.getloadavg()[0], 2)}
 
     # corpora staged once by a throwaway session whose JVM is then KILLED
     # (bench.py's teardown — a zombie heap sharing the box costs the first
@@ -724,31 +718,18 @@ def main() -> None:
         r["ratio_10x"] = round(ratio, 2)
         r["exponent"] = round(math.log(ratio) / math.log(10.0), 3)
         out[fam] = r
-        loads[f"after_{fam}"] = round(os.getloadavg()[0], 2)
         print(f"[probe] {fam}: {r['small']['sec']}s -> {r['large']['sec']}s "
               f"(x{r['ratio_10x']}, exponent {r['exponent']})",
               file=sys.stderr, flush=True)
 
-    # round-stamp like bench.py
-    rnd = os.environ.get("SPARK_GRAFT_ROUND")
-    if rnd is None:
-        import glob
-        import re
-
-        recorded = [int(m.group(1)) for p in glob.glob(os.path.join(ROOT, "BENCH_r*.json"))
-                    if (m := re.search(r"BENCH_r(\d+)\.json$", p))]
-        rnd = str(max(recorded, default=0) + 1)
-    path = os.path.join(ROOT, f"bench_scale_probe_r{int(rnd):02d}.json")
+    path = os.path.join(ROOT, f"bench_scale_probe_r{current_round(ROOT):02d}.json")
     families = out
     if only_set is not None:
         from scripts.spill_probe import merge_round_section
 
         families = merge_round_section(path, "families", out)
-        # keep the full sweep's per-family load marks; re-measured
-        # families (and this rerun's start) overwrite their own keys
-        loads = merge_round_section(path, "load_avg", loads)
     payload = {"metric": "scale_probe_10x", "families": families,
-               "load_avg": loads, "cpus": os.cpu_count()}
+               "cpus": os.cpu_count()}
     with open(path, "w") as f:
         json.dump(payload, f, indent=1)
     print(json.dumps({k: v["exponent"] for k, v in out.items()}))

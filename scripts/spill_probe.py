@@ -128,11 +128,11 @@ WORKLOAD_CONF: dict[str, dict[str, dict[str, str]]] = {
 def _leg_session(leg: str, workload: str = "dedup"):
     from pyspark.sql import SparkSession
 
-    from bigdatabowl_spark.session import _BUILD_CONF, configure
+    from bigdatabowl_spark.session import _BUILD_CONF, configure, host_cpus
 
     b = (
         SparkSession.builder.appName(f"bdb-spill-{leg}")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        .master(f"local[{host_cpus()}]")
     )
     for k, v in _BUILD_CONF.items():
         b = b.config(k, v)
@@ -244,20 +244,14 @@ def _bigram_counts(spark, sf_dir: str):
 
 
 def run_leg(leg: str, workload: str, sf_dir: str) -> dict:
-    from bench import _ambient_cpu_frac, _timed_min, _release_persistent_rdds
+    from bench import _release_persistent_rdds, _timed_min, _warmup_session
     import bigdatabowl_spark.plans  # noqa: F401
     from bigdatabowl_spark.plans.catalog import CATALOG
-
-    ambient = _ambient_cpu_frac()
-    spark = _leg_session(leg, workload)
-    spark.sparkContext.setLogLevel("ERROR")
-    # untimed warmup (bench r11 convention): JIT/codegen + python workers
     import pyspark.sql.functions as F
 
-    spark.range(0, 2_000_000, 1, 32).select(F.sum(F.col("id") * 2)).collect()
-    spark.range(0, 64, 1, 32).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).count()
+    spark = _leg_session(leg, workload)
+    spark.sparkContext.setLogLevel("ERROR")
+    _warmup_session(spark)
 
     result: dict = {}
     kernel_play = None
@@ -341,7 +335,6 @@ def run_leg(leg: str, workload: str, sf_dir: str) -> dict:
         "conf": LEG_CONF[leg],
         "wall_sec": round(wall, 3),
         "cpu_sec": round(cpu, 3),
-        "ambient_cpu_frac": ambient,
         **result["hash"],
         **_spill_metrics(spark),
     }
@@ -371,21 +364,14 @@ def main() -> None:
     if {"dedup", "bigram"} & set(want):
         # stage the 2M-doc corpus with a roomy throwaway session, then
         # kill the JVM so the legs own the box (bench.py gateway teardown)
+        from bench import _shutdown_jvm
         from bigdatabowl_spark.session import get_spark
         from scripts.scale_probe import _stage_docs
 
         spark = get_spark("bdb-spill-stage")
         spark.sparkContext.setLogLevel("ERROR")
         docs_dir = _stage_docs(spark, "docs_x100", 2_000_000)
-        gateway = spark.sparkContext._gateway
-        spark.stop()
-        gateway.shutdown()
-        if getattr(gateway, "proc", None) is not None:
-            gateway.proc.terminate()
-            try:
-                gateway.proc.wait(timeout=30)
-            except Exception:
-                gateway.proc.kill()
+        _shutdown_jvm(spark)
 
     # kernel and stream synthesize their own deterministic data in the
     # leg subprocess (kernel in-session, stream via marker-guarded
@@ -441,18 +427,9 @@ def main() -> None:
             ),
             "legs": legs,
         }
-    rnd = os.environ.get("SPARK_GRAFT_ROUND")
-    if rnd is None:
-        import glob
-        import re
+    from bench import current_round
 
-        recorded = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(ROOT, "BENCH_r*.json"))
-            if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
-        rnd = str(max(recorded, default=0) + 1)
-    path = os.path.join(ROOT, f"spill_probe_r{int(rnd):02d}.json")
+    path = os.path.join(ROOT, f"spill_probe_r{current_round(ROOT):02d}.json")
     payload = {
         "metric": "spill_probe",
         "workloads": merge_round_section(path, "workloads", workloads),
