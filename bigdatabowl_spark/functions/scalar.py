@@ -61,24 +61,9 @@ def angle_wrap_deg(deg: Column) -> Column:
     return F.pmod(deg + F.lit(180.0), F.lit(360.0))
 
 
-def hypot2(x: Column, y: Column) -> Column:
-    """Euclidean norm (F2) — normalize.py:72,82."""
-    return F.sqrt(x * x + y * y)
-
-
 def kinematic_pos(x0: Column, v: Column, a: Column, t: Column) -> Column:
     """x + v·t + ½·a·t² (F7) — play_eppa_cpu.py:235-240."""
     return x0 + v * t + F.lit(0.5) * a * t * t
-
-
-def projectile_z(v_z: Column, t: Column, g: float = 10.72468) -> Column:
-    """Ball z-trajectory 2 + v_z·t − ½gt² (F8) — play_eppa_cpu.py:340-351."""
-    return F.lit(2.0) + v_z * t - F.lit(0.5 * g) * t * t
-
-
-def flat_index(y_idx: Column, x_idx: Column, width: int = 120) -> Column:
-    """ravel_multi_index y·W + x (F13) — play_eppa_cpu.py:352."""
-    return y_idx * F.lit(width) + x_idx
 
 
 def surname(name: Column) -> Column:

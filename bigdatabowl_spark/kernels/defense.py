@@ -75,8 +75,8 @@ from pyspark.sql import DataFrame
 
 from bigdatabowl_spark.kernels.eppa import (
     EppaPriors,
+    _frame_guard,
     _frame_surfaces_core,
-    _prep_frame,
     _with_frame_meta,
     _ws,
     default_ep_curve,
@@ -334,11 +334,11 @@ def optimize_defense(
         out = []
         for fid in chosen:
             fr = pdf[pdf["frameId"] == fid]
-            prep = _prep_frame(fr)
-            if prep is None:
+            guard = _frame_guard(fr)
+            if guard is None:
                 continue
-            players, ball_start, fas = prep
-            players = players.reset_index(drop=True).copy()
+            idx, ball_start, fas = guard
+            players = fr.iloc[idx].reset_index(drop=True).copy()
             # defenders resume from their optimized state; offense follows
             # the recorded track (optimize_def.py:101-107 semantics)
             for i, row in players.iterrows():

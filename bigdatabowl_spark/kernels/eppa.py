@@ -6,8 +6,11 @@ surface of P(intercept), historical transition priors, trajectory-integrated
 completion probability, value-model expectations, and argmax summaries.
 
 Spark-first shape: everything before/after is DataFrame ops; the kernel is a
-float64 NumPy routine inside applyInPandas over (gameId, playId, frameId)
-groups — one Arrow batch per frame, broadcast-small priors in the closure.
+float64 NumPy routine inside ``groupBy("gameId", "playId").applyInArrow``
+(the iterator form): one task loops the frames of whole plays, reads the
+Arrow columns as NumPy arrays and yields ``pa.RecordBatch`` blocks built
+straight from the kernel's arrays — no pandas on either side of the
+boundary. Broadcast-small priors ride in the closure.
 
 Fidelity notes (replicating GPU-path semantics per SURVEY §7.5):
 - float64 throughout (play_eppa_cpu.py:47);
@@ -33,9 +36,11 @@ pluggable batch scorer; the default is a deterministic closed-form stand-in
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -311,7 +316,8 @@ def frame_surfaces(
     chunk: int = 330,
     value_ensemble=None,
 ) -> dict[str, np.ndarray]:
-    """Compute all per-frame surfaces. Returns dict of (F,)/(F,T)/(J,) arrays.
+    """Compute all per-frame surfaces. Returns dict of (F,)/(F,T)/(J,) arrays,
+    each owned by the caller (copied out of the per-process workspace).
 
     players: one row per non-ball, non-QB player with columns
     x, y, v_x, v_y, team_pos ('OFF'/'DEF'), nflId.
@@ -319,7 +325,7 @@ def frame_surfaces(
     px = players[["x", "y"]].to_numpy(dtype=np.float64)  # (J, 2)
     pv = players[["v_x", "v_y"]].to_numpy(dtype=np.float64)
     is_off = (players["team_pos"] == "OFF").to_numpy()
-    return _frame_surfaces_core(
+    s = _frame_surfaces_core(
         px,
         pv,
         is_off,
@@ -331,7 +337,9 @@ def frame_surfaces(
         priors,
         chunk=chunk,
         value_ensemble=value_ensemble,
+        attribution=True,
     )
+    return {k: v.copy() if isinstance(v, np.ndarray) else v for k, v in s.items()}
 
 
 def _ppc_surfaces(
@@ -465,10 +473,19 @@ def _frame_surfaces_core(
     value_ensemble=None,
     precomputed: tuple[np.ndarray, np.ndarray] | None = None,
     lean: bool = False,
+    attribution: bool = False,
 ) -> dict[str, np.ndarray]:
     """Array-level kernel body (r12: extracted from frame_surfaces so the
     M6 optimizer can evaluate candidate placements without a pandas
     round-trip per call).
+
+    The returned (F,T) surfaces are VIEWS of the per-process workspace,
+    valid until the next kernel call in this process: the Spark emits read
+    each frame before the next call, and frame_surfaces copies them out.
+    attribution=True adds step 12's per-player ``ind_eppa`` — only the
+    player and combined emits read it; without it the full (F,T,J) sigmoid
+    tensor is never materialized (step 5 runs chunk by chunk in the log
+    scratch) and the raw per-team sums are skipped.
 
     precomputed: optional (d_mag (F,J), p_int (F,T,J)) — steps 1-5 skipped;
     used when the caller maintains the sigmoid tensor incrementally (only
@@ -493,7 +510,7 @@ def _frame_surfaces_core(
     # kernel's ~300 MB/call of >32 MB temporaries would otherwise be
     # mmap/munmap'd by glibc every call and re-fault their pages (measured
     # 2-17 s/call first-touch under concurrency vs ~0.5 s compute). Returned
-    # surfaces are COPIED out, so results stay valid across calls.
+    # surfaces alias the workspace; frame_surfaces copies them out once.
 
     # 1-5. reaction projection → P(intercept) sigmoid field. When the
     # tensor is not supplied, step 5's expansion is FUSED into step 6's
@@ -502,12 +519,14 @@ def _frame_surfaces_core(
     # kernel is memory-bound under 32-way worker concurrency (charged CPU
     # per frame ran ~2.3x its idle single-thread time), and both step 5
     # and step 6 are row-independent, so chunked evaluation is
-    # bit-identical to the full-pass form.
+    # bit-identical to the full-pass form. Only step 12 re-reads the whole
+    # tensor, so without attribution each chunk's sigmoid lands in the log
+    # scratch itself and the (F,T,J) buffer is never allocated.
     fuse_sigmoid = precomputed is None
     if fuse_sigmoid:
         d_mag, t_tot = _reach_times(px, pv, grid, params, reuse=True)
         tof_scaled = tof * (_SIGMOID_K / params.tti_sigma)
-        p_int = _ws("pif.p_int", (F, T, J))
+        p_int = _ws("pif.p_int", (F, T, J)) if attribution else None
     else:
         d_mag, p_int = precomputed
 
@@ -526,27 +545,30 @@ def _frame_surfaces_core(
     team_mask[idx_off, 0] = 1.0
     team_mask[idx_def, 1] = 1.0
     team_sums = _ws("fs.team_sums", (F * T, 2))
-    raw_sums = _ws("fs.raw_sums", (F * T, 2))
+    if attribution:
+        raw_sums = _ws("fs.raw_sums", (F * T, 2))
     with np.errstate(divide="ignore"):
         for lo in range(0, F, chunk):
             hi = min(lo + chunk, F)
+            lc = _ws("fs.log_chunk", (hi - lo, T, J))
+            p_chunk = lc if p_int is None else p_int[lo:hi]
             if fuse_sigmoid:  # step 5 for this chunk (see comment above)
-                _sigmoid_expand(t_tot[lo:hi], tof_scaled, p_int[lo:hi])
+                _sigmoid_expand(t_tot[lo:hi], tof_scaled, p_chunk)
             # the attribution stage (step 12) needs raw per-team p_int sums;
             # computing them here reuses the cache-resident chunk instead of
             # re-reading the full 36 MB tensor later (row-chunked dgemm is
             # bit-identical: each output row sees only its own input row).
-            # lean mode skips step 12, so the raw sums are dead weight there.
-            if not lean:
+            if attribution:
                 np.matmul(
-                    p_int[lo:hi].reshape((hi - lo) * T, J),
+                    p_chunk.reshape((hi - lo) * T, J),
                     team_mask,
                     out=raw_sums[lo * T : hi * T],
                 )
-            lc = _ws("fs.log_chunk", (hi - lo, T, J))
-            np.minimum(p_int[lo:hi], 1.0 - 1e-12, out=lc)
-            np.maximum(lc, 0.0, out=lc)
-            np.negative(lc, out=lc)
+            # log1p(-clip(p, 0, 1-1e-12)) in two passes: p is a sigmoid
+            # output, never below +0.0, so negate-then-floor equals the
+            # min → max(·, 0) → negate sequence bit for bit (NaN included)
+            np.negative(p_chunk, out=lc)
+            np.maximum(lc, -(1.0 - 1e-12), out=lc)
             np.log1p(lc, out=lc)
             np.matmul(lc.reshape((hi - lo) * T, J), team_mask, out=team_sums[lo * T : hi * T])
     p_off = _ws("fs.p_off", (F, T))
@@ -643,20 +665,22 @@ def _frame_surfaces_core(
 
     if lean:
         # objective-only mode: the caller reduces eppa_ft immediately
-        # (M6 candidate scoring); attribution, certification and result
-        # copies are skipped. eppa_ft aliases the workspace — valid until
-        # the next kernel call in this process.
+        # (M6 candidate scoring); certification is skipped too.
         return {"eppa_ft": eppa_ft}
 
-    # 12. per-player attribution: share of team p_int at each (F,T). Both
-    # contractions over the (F,T,J) sigmoid tensor are BLAS matmuls that
-    # read it once each — no per-team slice copies are materialized.
-    p_int_off_sum = raw_sums[:, 0]  # (F·T,) strided view, filled chunk-wise above
-    p_int_off_sum += 1e-12
-    weight = tmp_ft  # (F,T) scratch: eppa_ft / team p_int sum
-    np.divide(eppa_ft.reshape(-1), p_int_off_sum, out=weight.reshape(-1))
-    contrib = np.matmul(weight.reshape(1, F * T), p_int.reshape(F * T, J))
-    ind_eppa = np.where(is_off, contrib[0], 0.0)
+    out = {}
+    if attribution:
+        # 12. per-player attribution: share of team p_int at each (F,T).
+        # Both contractions over the (F,T,J) sigmoid tensor are BLAS
+        # matmuls that read it once each — no per-team slice copies.
+        p_int_off_sum = raw_sums[:, 0]  # (F·T,) strided view, filled chunk-wise above
+        p_int_off_sum += 1e-12
+        weight = tmp_ft  # (F,T) scratch: eppa_ft / team p_int sum
+        np.divide(eppa_ft.reshape(-1), p_int_off_sum, out=weight.reshape(-1))
+        contrib = np.matmul(weight.reshape(1, F * T), p_int.reshape(F * T, J))
+        # attribution stays on offense (play_eppa_cpu.py:553-559): the
+        # defense's entries are exact zeros by construction
+        out["ind_eppa"] = np.where(is_off, contrib[0], 0.0)
 
     # 13. self-certification: re-assert the invariants the reference left as
     # commented-out asserts (play_eppa_cpu.py:338-339) plus the probability-
@@ -697,26 +721,24 @@ def _frame_surfaces_core(
         violations += int(not (msum == 0.0 or abs(msum - 1.0) <= 1e-6))
     np.isfinite(eppa_ft, out=bws)
     violations += int(eppa_ft.size - np.count_nonzero(bws))
-    # attribution stays on offense (play_eppa_cpu.py:553-559)
-    violations += int(np.abs(ind_eppa[~is_off]).sum() > 0.0)
 
-    return {
-        "invariant_violations": violations,
-        "p_off": p_off.copy(),
-        "p_def": p_def.copy(),
-        "ppc_off": ppc_off.copy(),
-        "ppc_def": ppc_def.copy(),
-        "trans_prior": trans_prior.copy(),
-        "trans": trans.copy(),
-        "xyac": xyac,
-        "xepa_comp": xepa_comp,
-        "xepa_inc": xepa_inc,
-        "value_ft": value_ft.copy(),
-        "eppa_ft": eppa_ft.copy(),
-        "ind_eppa": ind_eppa,
-        "nflId": nfl_ids,
-        "team_pos_players": team_pos_arr,
-    }
+    out.update(
+        invariant_violations=violations,
+        p_off=p_off,
+        p_def=p_def,
+        ppc_off=ppc_off,
+        ppc_def=ppc_def,
+        trans_prior=trans_prior,
+        trans=trans,
+        xyac=xyac,
+        xepa_comp=xepa_comp,
+        xepa_inc=xepa_inc,
+        value_ft=value_ft,
+        eppa_ft=eppa_ft,
+        nflId=nfl_ids,
+        team_pos_players=team_pos_arr,
+    )
+    return out
 
 
 # ----------------------------------------------------------- Spark wrappers
@@ -741,25 +763,47 @@ PLAYER_SCHEMA = (
 )
 
 
-def _prep_frame(pdf: pd.DataFrame) -> tuple[pd.DataFrame, np.ndarray, int] | None:
-    """Split a frame group into (players, ball_start, frames_after_snap).
+_ARROW_TYPES = {
+    "long": pa.int64(),
+    "int": pa.int32(),
+    "double": pa.float64(),
+    "string": pa.string(),
+}
 
-    Frame guards (P15, play_eppa_cpu.py:92-98,225-232): needs a ball row and
-    ≥1 player per side; QB position is the throw origin; ball & QB dropped
-    from the defender/receiver set; duplicate players dropped.
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The exact Arrow types Spark expects back for a DDL schema string —
+    the grouped Arrow UDF rejects a batch whose types differ."""
+    return pa.schema([(n, _ARROW_TYPES[t]) for n, t in (f.split() for f in ddl.split(", "))])
+
+
+def _frame_guard(frame) -> tuple[np.ndarray, np.ndarray, int] | None:
+    """Frame guards (P15, play_eppa_cpu.py:92-98,225-232) over one frame's
+    rows; ``frame`` maps column name → 1-D array (a dict of NumPy arrays or
+    a pandas DataFrame). Needs a ball row (nflId 0) and players of ≥ 2
+    teams; the first QB row is the throw origin, else the first ball row;
+    ball and QB rows leave the defender/receiver set; a duplicate nflId
+    keeps its first row.
+
+    Returns (player row indices in row order, ball_start, frames_after_snap),
+    or None when the frame is skipped.
     """
-    ball = pdf[pdf["nflId"] == 0]
-    qb = pdf[pdf["position"] == "QB"]
-    if ball.empty:
+    nfl = np.asarray(frame["nflId"])
+    is_qb = np.asarray(frame["position"]) == "QB"
+    ball = np.flatnonzero(nfl == 0)
+    if ball.size == 0:
         return None
-    origin = qb if not qb.empty else ball
-    ball_start = origin[["x", "y"]].iloc[0].to_numpy(dtype=np.float64)
-    players = pdf[(pdf["nflId"] != 0) & (pdf["position"] != "QB")]
-    players = players.drop_duplicates(subset=["nflId"])  # :232
-    if players.empty or players["team_pos"].nunique() < 2:
+    qb = np.flatnonzero(is_qb)
+    o = qb[0] if qb.size else ball[0]
+    ball_start = np.array([np.asarray(frame["x"])[o], np.asarray(frame["y"])[o]], np.float64)
+    cand = np.flatnonzero((nfl != 0) & ~is_qb)
+    _, first = np.unique(nfl[cand], return_index=True)  # :232
+    idx = cand[np.sort(first)]
+    # null teams (None, or NaN from pandas) do not count, as in nunique()
+    teams = {t for t in np.asarray(frame["team_pos"])[idx].tolist() if t is not None and t == t}
+    if len(teams) < 2:
         return None
-    fas = int(pdf["frames_after_snap"].iloc[0])
-    return players, ball_start, fas
+    return idx, ball_start, int(np.asarray(frame["frames_after_snap"])[0])
 
 
 def _with_frame_meta(
@@ -775,7 +819,7 @@ def _with_frame_meta(
 
     The result is range-partitioned by (gameId, playId) into one task per
     core, the plan's only exchange: the per-play window and the caller's
-    ``groupBy("gameId", "playId").applyInPandas`` both accept it, so the
+    ``groupBy("gameId", "playId").applyInArrow`` both accept it, so the
     window, the filter and the kernel run in one stage. A user-set width is
     exempt from AQE's byte-based coalescing, which would funnel this
     compute-bound kernel (~KBs of input per frame) into one task. Range
@@ -807,6 +851,12 @@ def _with_frame_meta(
     )
 
 
+_KERNEL_COLS = (
+    "gameId", "playId", "frameId", "nflId", "position", "team_pos",
+    "x", "y", "v_x", "v_y", "frames_after_snap",
+)
+
+
 def _make_kernel(
     schema: str,
     emit,
@@ -817,71 +867,110 @@ def _make_kernel(
     """Per-PLAY kernel: loops the play's eligible frames inside one task —
     the reference's own loop structure (play_eppa_cpu.py:651). Grouping at
     play grain amortizes worker warmup and keeps shuffle groups ≈ plays;
-    at 100 TB parallelism across plays is ample (millions of groups)."""
+    at 100 TB parallelism across plays is ample (millions of groups).
+
+    The play arrives as Arrow batches and leaves as one batch per emitted
+    block, typed exactly as ``schema``. Each frame's block is built before
+    the next kernel call, so the workspace views the core returns are
+    never copied here. Only the player and combined emits read the
+    per-player attribution, so only they pay for step 12."""
     params = params or EppaParams()
     priors = priors or EppaPriors.default()
-    empty = pd.DataFrame(columns=[f.split()[0] for f in schema.split(", ")])
+    out_schema = _arrow_schema(schema)
+    attribution = emit in (_emit_player, _emit_combined)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for fid, frame_pdf in pdf.groupby("frameId", sort=True):
-            prep = _prep_frame(frame_pdf)
-            if prep is None:
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        play = pa.Table.from_batches(list(batches))
+        cols = {c: play.column(c).to_numpy() for c in _KERNEL_COLS}
+        fids = cols["frameId"]
+        for fid in np.unique(fids):
+            rows = np.flatnonzero(fids == fid)
+            guard = _frame_guard({c: a[rows] for c, a in cols.items()})
+            if guard is None:
                 continue
-            players, ball_start, fas = prep
-            s = frame_surfaces(
-                players, ball_start, fas, params, priors,
+            idx, ball_start, fas = guard
+            idx = rows[idx]
+            team_pos = cols["team_pos"][idx]
+            s = _frame_surfaces_core(
+                np.column_stack((cols["x"][idx], cols["y"][idx])),
+                np.column_stack((cols["v_x"][idx], cols["v_y"][idx])),
+                team_pos == "OFF",
+                cols["nflId"][idx],
+                team_pos,
+                ball_start,
+                fas,
+                params,
+                priors,
                 value_ensemble=value_ensemble,
+                attribution=attribution,
             )
-            key = (
-                int(frame_pdf["gameId"].iloc[0]),
-                int(frame_pdf["playId"].iloc[0]),
-                int(fid),
-            )
-            out.append(emit(key, fas, s))
-        if not out:
-            return empty
-        return pd.concat(out, ignore_index=True)
+            key = (int(cols["gameId"][rows[0]]), int(cols["playId"][rows[0]]), int(fid))
+            for n, block in emit(key, fas, s):
+                yield _batch(out_schema, n, block)
 
     return kernel
 
 
-def _emit_field(key, fas, s) -> pd.DataFrame:
+def _batch(schema: pa.Schema, n: int, cols: dict) -> pa.RecordBatch:
+    """One emitted block of n rows in ``schema``'s exact types: scalar
+    values repeat over the rows, and schema columns absent from ``cols``
+    are null (the other blocks of the combined union)."""
+    arrays = []
+    for f in schema:
+        v = cols.get(f.name)
+        if v is None:
+            arrays.append(pa.nulls(n, f.type))
+        elif np.ndim(v) == 0:
+            arrays.append(pa.repeat(pa.scalar(v, f.type), n))
+        else:
+            arrays.append(pa.array(v, f.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+# Emits map one frame's surfaces to [(rows, {column: array or scalar})]
+# blocks; _batch types them against the op's schema.
+
+
+def _emit_field(key, fas, s) -> list[tuple[int, dict]]:
     """field_df block: one row per cell (play_eppa_cpu.py:616-639)."""
     gid, pid, fid = key
     grid = field_grid()
     best_T = s["eppa_ft"].argmax(axis=1)  # per-cell best ToF
     rng = np.arange(N_CELLS)
-    return pd.DataFrame(
-        {
-            "gameId": gid,
-            "playId": pid,
-            "frameId": fid,
-            "ball_end_x": grid[:, 0],
-            "ball_end_y": grid[:, 1],
-            "eppa1": s["eppa_ft"].sum(axis=1),
-            "eppa1m": s["eppa_ft"].max(axis=1),
-            "p_int_off": s["p_off"][rng, best_T],
-            "p_int_def": s["p_def"][rng, best_T],
-            "ppc_off": s["ppc_off"][rng, best_T],
-            "ppc_def": s["ppc_def"][rng, best_T],
-            "trans": s["trans"].sum(axis=1),
-            "xyac": s["xyac"],
-            "xepa_comp": s["xepa_comp"],
-            "invariant_violations": int(s["invariant_violations"]),
-        }
-    )
+    return [
+        (
+            N_CELLS,
+            {
+                "gameId": gid,
+                "playId": pid,
+                "frameId": fid,
+                "ball_end_x": grid[:, 0],
+                "ball_end_y": grid[:, 1],
+                "eppa1": s["eppa_ft"].sum(axis=1),
+                "eppa1m": s["eppa_ft"].max(axis=1),
+                "p_int_off": s["p_off"][rng, best_T],
+                "p_int_def": s["p_def"][rng, best_T],
+                "ppc_off": s["ppc_off"][rng, best_T],
+                "ppc_def": s["ppc_def"][rng, best_T],
+                "trans": s["trans"].sum(axis=1),
+                "xyac": s["xyac"],
+                "xepa_comp": s["xepa_comp"],
+                "invariant_violations": int(s["invariant_violations"]),
+            },
+        )
+    ]
 
 
-def _emit_pass(key, fas, s) -> pd.DataFrame:
+def _emit_pass(key, fas, s) -> list[tuple[int, dict]]:
     """passes_df block: per-frame argmax (play_eppa_cpu.py:564-614)."""
     gid, pid, fid = key
     grid = field_grid()
     tof = tof_values()
     flat = int(s["eppa_ft"].argmax())
     f_i, T_i = np.unravel_index(flat, s["eppa_ft"].shape)
-    return pd.DataFrame(
-        [
+    return [
+        (
+            1,
             {
                 "gameId": gid,
                 "playId": pid,
@@ -895,25 +984,28 @@ def _emit_pass(key, fas, s) -> pd.DataFrame:
                 "max_eppa1_trans": float(s["trans"][f_i, T_i]),
                 "max_eppa1": float(s["eppa_ft"][f_i, T_i]),
                 "invariant_violations": int(s["invariant_violations"]),
-            }
-        ]
-    )
+            },
+        )
+    ]
 
 
-def _emit_player(key, fas, s) -> pd.DataFrame:
+def _emit_player(key, fas, s) -> list[tuple[int, dict]]:
     """player_stats_df block: per-player attribution (play_eppa_cpu.py:553-559)."""
     gid, pid, fid = key
-    return pd.DataFrame(
-        {
-            "gameId": gid,
-            "playId": pid,
-            "frameId": fid,
-            "nflId": s["nflId"],
-            "team_pos": s["team_pos_players"],
-            "ind_eppa1": s["ind_eppa"],
-            "invariant_violations": int(s["invariant_violations"]),
-        }
-    )
+    return [
+        (
+            len(s["nflId"]),
+            {
+                "gameId": gid,
+                "playId": pid,
+                "frameId": fid,
+                "nflId": s["nflId"],
+                "team_pos": s["team_pos_players"],
+                "ind_eppa1": s["ind_eppa"],
+                "invariant_violations": int(s["invariant_violations"]),
+            },
+        )
+    ]
 
 
 def eppa_field_surface(
@@ -925,7 +1017,7 @@ def eppa_field_surface(
     """field_df: one row per field cell per eligible frame (viz surface,
     play_eppa_cpu.py:616-639)."""
     eligible = _with_frame_meta(norm)
-    return eligible.groupBy("gameId", "playId").applyInPandas(
+    return eligible.groupBy("gameId", "playId").applyInArrow(
         _make_kernel(FIELD_SCHEMA, _emit_field, params, priors, value_ensemble),
         FIELD_SCHEMA,
     )
@@ -940,7 +1032,7 @@ def eppa_pass_summary(
     """passes_df: per-frame argmax summary — the best hypothetical pass
     (unravel_index(argmax), play_eppa_cpu.py:564-614,621-637)."""
     eligible = _with_frame_meta(norm)
-    return eligible.groupBy("gameId", "playId").applyInPandas(
+    return eligible.groupBy("gameId", "playId").applyInArrow(
         _make_kernel(PASS_SCHEMA, _emit_pass, params, priors, value_ensemble),
         PASS_SCHEMA,
     )
@@ -954,7 +1046,7 @@ def eppa_player_stats(
 ) -> DataFrame:
     """player_stats_df: per-player EPPA attribution (play_eppa_cpu.py:553-559)."""
     eligible = _with_frame_meta(norm)
-    return eligible.groupBy("gameId", "playId").applyInPandas(
+    return eligible.groupBy("gameId", "playId").applyInArrow(
         _make_kernel(PLAYER_SCHEMA, _emit_player, params, priors, value_ensemble),
         PLAYER_SCHEMA,
     )
@@ -979,26 +1071,17 @@ COMBINED_SCHEMA = (
     "invariant_violations long"
 )
 
-_COMBINED_COLS = [f.split()[0] for f in COMBINED_SCHEMA.split(", ")]
 
-
-def _emit_combined(key, fas, s) -> pd.DataFrame:
-    blocks = []
-    for kind, emit in (
-        ("field", _emit_field),
-        ("pass", _emit_pass),
-        ("player", _emit_player),
-    ):
-        b = emit(key, fas, s)
-        b.insert(0, "row_kind", kind)
-        b["frames_after_snap"] = fas
-        blocks.append(b)
-    out = pd.concat(blocks, ignore_index=True)
-    # concat fills absent block columns with float NaN — retype the
-    # non-double ones so Arrow sees proper nulls (NaN breaks long/string)
-    out["nflId"] = out["nflId"].astype("Int64")
-    out["team_pos"] = out["team_pos"].where(out["team_pos"].notna(), None)
-    return out[_COMBINED_COLS]
+def _emit_combined(key, fas, s) -> list[tuple[int, dict]]:
+    return [
+        (n, {**cols, "row_kind": kind, "frames_after_snap": fas})
+        for kind, emit in (
+            ("field", _emit_field),
+            ("pass", _emit_pass),
+            ("player", _emit_player),
+        )
+        for n, cols in emit(key, fas, s)
+    ]
 
 
 def eppa_combined(
@@ -1010,7 +1093,7 @@ def eppa_combined(
     """All three EPPA output tables (field/pass/player) from a single
     kernel pass, as a row_kind-discriminated union."""
     eligible = _with_frame_meta(norm)
-    return eligible.groupBy("gameId", "playId").applyInPandas(
+    return eligible.groupBy("gameId", "playId").applyInArrow(
         _make_kernel(COMBINED_SCHEMA, _emit_combined, params, priors, value_ensemble),
         COMBINED_SCHEMA,
     )

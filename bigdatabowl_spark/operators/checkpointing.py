@@ -34,11 +34,10 @@ Measured premium (10M-edge / 1M-node synthetic graph, local[32],
 interval=1 i.e. EVERY round durable — the worst case): below
 run-to-run noise on local disk — two paired fresh-JVM runs read
 2.94/2.51 s/superstep durable vs 3.28/2.71 local, with paired CPU
-equal (`durable_ckpt_probe_r12.json` via
-scripts/durable_ckpt_probe.py; SCALE.md §6l). The whole durable footprint (edge table + degree
-table + 3 frontiers) is 142 MB; per durable round only the O(nodes)
-frontier is written. On a real cluster the premium is the DFS write,
-amortized by the interval.
+equal (`durable_ckpt_probe_r12.json`; SCALE.md §6l). The whole durable
+footprint (edge table + degree table + 3 frontiers) is 142 MB; per
+durable round only the O(nodes) frontier is written. On a real cluster
+the premium is the DFS write, amortized by the interval.
 """
 
 from __future__ import annotations

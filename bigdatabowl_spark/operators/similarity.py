@@ -91,28 +91,6 @@ def cosine_topk(
     )
 
 
-def hyperplane_weights(spark, dims: int = 64, planes: int = 8) -> DataFrame:
-    """Deterministic integer hyperplane weights w(d,k) ∈ [-2^30, 2^30).
-
-    w = LCG(d·planes + k) − 2^30 — pure integer arithmetic, reproducible in
-    SQL with generate_series. Broadcast-sized (dims × planes rows).
-    """
-    return (
-        spark.range(dims)
-        .withColumnRenamed("id", "d")
-        .crossJoin(spark.range(planes).withColumnRenamed("id", "k"))
-        .select(
-            "d",
-            "k",
-            (
-                (F.lit(_LCG_A) * (F.col("d") * planes + F.col("k")) + F.lit(_LCG_C))
-                % F.lit(_LCG_M)
-                - F.lit(_LCG_M // 2)
-            ).alias("wq"),
-        )
-    )
-
-
 def lsh_bucket_assignments(
     emb: DataFrame,
     spark,

@@ -38,17 +38,6 @@ def lang_hits(text: Column, lang: str) -> Column:
     return F.size(F.filter(tokens(F.lower(text)), lambda x: x.isin(*kw)))
 
 
-def lang_id(text: Column) -> Column:
-    """Argmax language with fixed tiebreak order en > de > es > fr."""
-    s = {lang: lang_hits(text, lang) for lang in LANG_KEYWORDS}
-    return (
-        F.when((s["en"] >= s["de"]) & (s["en"] >= s["es"]) & (s["en"] >= s["fr"]), "en")
-        .when((s["de"] >= s["es"]) & (s["de"] >= s["fr"]), "de")
-        .when(s["es"] >= s["fr"], "es")
-        .otherwise("fr")
-    )
-
-
 def quality_select(text_col: str = "text") -> list[Column]:
     """Column list of quality features (use in .select) — the SINGLE
     definition of the feature arithmetic: plans/datapipe.text_quality and

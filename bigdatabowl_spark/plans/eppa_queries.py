@@ -253,7 +253,7 @@ def tracking_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_eppa_field_surface(spark: SparkSession, sf_dir: str):
     """field_df viz surface: 6,600 cells × eligible frames — the per-frame
-    EPPA hot path (play_eppa_cpu.py:222-641) as applyInPandas over plays.
+    EPPA hot path (play_eppa_cpu.py:222-641) as applyInArrow over plays.
     Staged from the shared single-pass kernel (stage_eppa_chain)."""
     stage_eppa_chain(spark, sf_dir)
     return spark.read.parquet(os.path.join(KERNEL_OUT, "eppa_field_surface"))
@@ -410,7 +410,7 @@ def q_m2_value_model_width(spark: SparkSession, sf_dir: str):
     every hypothetical pass of each frame — (F·T, 26) = 264,000 rows × 26
     features — scored through the vectorized 8-class softprob tree ensemble
     and dotted with the class value vector inside the kernel
-    (play_eppa_cpu.py:424-459). Same applyInPandas plan as
+    (play_eppa_cpu.py:424-459). Same applyInArrow plan as
     eppa_pass_summary; only the value-model stage widens.
 
     The model rides the full S6 model-binary lifecycle at the reference's

@@ -466,7 +466,7 @@ def stream_eppa_kernel(spark: SparkSession, sf_dir: str):
     stream (one parquet file per play — `partitionBy(gameId, playId)` after
     a key repartition guarantees a play never splits across files, so every
     micro-batch carries only whole plays), foreachBatch runs the SAME
-    applyInPandas kernel per micro-batch and appends the pass summaries to
+    applyInArrow kernel per micro-batch and appends the pass summaries to
     a parquet sink. The Spark side returns the STREAM-accumulated table;
     the DuckDB oracle reads the BATCH-staged eppa_pass_summary parquet —
     equality of every float64 proves micro-batching changed nothing.
@@ -481,7 +481,7 @@ def stream_eppa_kernel(spark: SparkSession, sf_dir: str):
     instead of duplicating rows (ST8; ADVICE r5 — a plain append here is
     only at-least-once).
 
-    Scale: the kernel is per-play (applyInPandas groups), so micro-batch
+    Scale: the kernel is per-play (applyInArrow groups), so micro-batch
     composition cannot change numerics; state is only the file-source
     offset log; the sink append is one small parquet per batch. At real
     scale the play partitioning comes from the tracking producer (one

@@ -101,10 +101,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def local_rows_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     """Small local-rows DataFrame built through the Arrow/pandas path.
 

@@ -12,7 +12,7 @@ first two; r12 added the last two — VERDICT r11 item 3):
 - bigram: explode 78M token bigrams → groupBy(a,b) count → order-free
   checksum, same corpus — SHUFFLE-BOUND (the hash-aggregate state is
   the work), the regime where spill is predicted to cost wall-clock;
-- kernel: the eppa applyInPandas field-surface kernel over the scale
+- kernel: the eppa applyInArrow field-surface kernel over the scale
   probe's 32-play × 40-frame synthetic feed — the ARROW/PYTHON-WORKER
   regime: tight additionally caps each Python worker's address space
   (spark.executor.pyspark.memory → RLIMIT_AS), so the kernel's reused
@@ -101,7 +101,7 @@ _ROCKSDB_PROVIDER = (
 # lookup past the first batch becomes an SST read through a cache that
 # can't hold the working set. The kernel workload's Python side is
 # additionally capped via spark.executor.pyspark.memory (RLIMIT_AS on
-# each worker), so the applyInPandas path — Arrow batches + the kernel's
+# each worker), so the applyInArrow path — Arrow batches + the kernel's
 # reused per-process buffers — runs against a hard address-space ceiling
 # instead of 128 GiB of headroom.
 WORKLOAD_CONF: dict[str, dict[str, dict[str, str]]] = {
@@ -257,7 +257,7 @@ def run_leg(leg: str, workload: str, sf_dir: str) -> dict:
     kernel_play = None
     if workload == "kernel":
         # the scale probe's large leg shape: 32 plays × 40 frames → 7.18M
-        # field rows through the applyInPandas kernel (built untimed)
+        # field rows through the applyInArrow kernel (built untimed)
         from bench import _synthetic_play
 
         kernel_play = _synthetic_play(spark, 40, 32).localCheckpoint()

@@ -1019,3 +1019,132 @@ def test_step8_compact_bit_identical_vs_dense():
             want_off, want_def = dense_ppc(p, q, ball, params)
             assert np.array_equal(got_off, want_off), (z_min, z_max)
             assert np.array_equal(got_def, want_def), (z_min, z_max)
+
+
+# ------------------------------------- Arrow kernel path: guard and work
+
+
+def _pandas_prep_frame(pdf: pd.DataFrame):
+    """The pandas frame guard the array-level _frame_guard replaced, kept
+    verbatim as its specification (P15, play_eppa_cpu.py:92-98,225-232)."""
+    ball = pdf[pdf["nflId"] == 0]
+    qb = pdf[pdf["position"] == "QB"]
+    if ball.empty:
+        return None
+    origin = qb if not qb.empty else ball
+    ball_start = origin[["x", "y"]].iloc[0].to_numpy(dtype=np.float64)
+    players = pdf[(pdf["nflId"] != 0) & (pdf["position"] != "QB")]
+    players = players.drop_duplicates(subset=["nflId"])
+    if players.empty or players["team_pos"].nunique() < 2:
+        return None
+    return players, ball_start, int(pdf["frames_after_snap"].iloc[0])
+
+
+def _guard_frame(rows) -> pd.DataFrame:
+    return pd.DataFrame(
+        rows, columns=["nflId", "position", "team_pos", "x", "y", "v_x", "v_y"]
+    ).assign(frames_after_snap=17)
+
+
+_BALL = (0, None, "FTBL", 35.0, 26.5, 0.0, 0.0)
+_QB = (99, "QB", "OFF", 33.0, 25.0, 0.0, 0.0)
+_WR = (11, "WR", "OFF", 40.0, 10.0, 5.0, 0.0)
+_WR2 = (12, "WR", "OFF", 45.0, 26.0, 2.0, 1.0)
+_CB = (21, "CB", "DEF", 42.0, 12.0, -1.0, 0.5)
+
+
+def _assert_guard_matches_pandas(frame: pd.DataFrame):
+    from bigdatabowl_spark.kernels.eppa import _frame_guard
+
+    want = _pandas_prep_frame(frame)
+    # the Spark path hands the guard NumPy arrays, defense.py a DataFrame
+    for arg in (frame, {c: frame[c].to_numpy() for c in frame.columns}):
+        got = _frame_guard(arg)
+        if want is None:
+            assert got is None
+            continue
+        idx, ball_start, fas = got
+        players, want_ball, want_fas = want
+        pd.testing.assert_frame_equal(frame.iloc[idx], players)
+        assert np.array_equal(ball_start, want_ball) and fas == want_fas
+    return want
+
+
+def test_frame_guard_skips_frame_without_ball():
+    assert _assert_guard_matches_pandas(_guard_frame([_QB, _WR, _CB])) is None
+
+
+def test_frame_guard_throws_from_ball_without_qb():
+    _, ball_start, _ = _assert_guard_matches_pandas(_guard_frame([_WR, _BALL, _CB]))
+    assert ball_start.tolist() == [35.0, 26.5]
+
+
+def test_frame_guard_keeps_first_duplicate_in_row_order():
+    dup = (21, "CB", "DEF", 50.0, 30.0, 0.0, 0.0)  # a second nflId-21 row
+    players, ball_start, _ = _assert_guard_matches_pandas(
+        _guard_frame([_WR2, _CB, _BALL, _QB, dup, _WR])
+    )
+    assert players["nflId"].tolist() == [12, 21, 11]
+    assert players["x"].tolist() == [45.0, 42.0, 40.0]
+    assert ball_start.tolist() == [33.0, 25.0]
+
+
+def test_frame_guard_skips_one_team_frame():
+    assert _assert_guard_matches_pandas(_guard_frame([_BALL, _QB, _WR, _WR2])) is None
+
+
+def _play_batch(frames) -> "pa.RecordBatch":
+    import pyarrow as pa
+
+    pdf = pd.concat(
+        [_guard_frame(rows).assign(frameId=fid) for fid, rows in frames],
+        ignore_index=True,
+    ).assign(gameId=1, playId=7)
+    return pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+
+
+def test_field_kernel_skips_attribution_tensor(monkeypatch):
+    """The field emit never reads ind_eppa, so its kernel call builds no
+    (F,T,J) sigmoid tensor; the player emit, which reads it, does. Both
+    emit exactly their schema's Arrow types, and skip a guarded frame."""
+    from bigdatabowl_spark.kernels import eppa as E
+
+    batch = _play_batch([(3, [_BALL, _QB, _WR, _CB, _WR2]), (4, [_QB, _WR, _CB])])
+    for schema, emit, builds_tensor in (
+        (E.FIELD_SCHEMA, E._emit_field, False),
+        (E.PLAYER_SCHEMA, E._emit_player, True),
+    ):
+        monkeypatch.setattr(E, "_WS", {})
+        out = list(E._make_kernel(schema, emit, None, None)(iter([batch])))
+        assert [b.schema for b in out] == [E._arrow_schema(schema)]
+        assert set(out[0].column("frameId").to_pylist()) == {3}  # frame 4: no ball
+        has_tensor = any(k[0] == "pif.p_int" for k in E._WS)
+        assert has_tensor == builds_tensor, schema
+
+
+def test_frame_surfaces_owns_its_arrays():
+    """frame_surfaces copies out of the kernel workspace: a second call
+    with other players leaves the first result untouched."""
+    params, priors = EppaParams(), EppaPriors.default()
+    first = frame_surfaces(_players_frame(), np.array([35.0, 26.5]), 20, params, priors)
+    kept = {k: np.array(v, copy=True) for k, v in first.items() if isinstance(v, np.ndarray)}
+    other, _ = _m6_random_frame(3)
+    frame_surfaces(other.assign(nflId=range(len(other))), np.array([30.0, 20.0]), 9, params, priors)
+    for k, v in kept.items():
+        assert np.array_equal(first[k], v), k
+
+
+def test_step6_fold_matches_min_max_negate_bitwise():
+    """Step 6 negates then floors at −(1−1e-12) instead of min → max(·, 0)
+    → negate. On sigmoid outputs (never below +0.0) the two agree bit
+    for bit, signed zero and NaN payload included."""
+    c = 1.0 - 1e-12
+    p = np.array(
+        [0.0, 5e-324, np.nextafter(c, -1.0), c, np.nextafter(c, 1.0), 1.0, np.nan]
+    )
+    old = np.minimum(p, c)
+    np.maximum(old, 0.0, out=old)
+    np.negative(old, out=old)
+    new = np.negative(p)
+    np.maximum(new, -c, out=new)
+    assert np.array_equal(old.view(np.uint64), new.view(np.uint64))
